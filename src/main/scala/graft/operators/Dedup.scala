@@ -991,85 +991,94 @@ object Dedup extends QueryModule {
 
   // ---------------- Duplicate-cluster assembly ----------------
 
-  /** Connected components over an undirected edge list `(a, b)` by
-    * min-label propagation WITH pointer jumping (Shiloach–Vishkin-style
-    * hook + shortcut — the same O(log n)-round contraction class as the
-    * small-star/large-star algorithm of Kiveris et al. 2014): every node
-    * starts as its own label; each round HOOKS — takes the min of its
-    * own and its neighbors' labels, moving the component minimum one hop
-    * through the GRAPH — and every SECOND round also SHORTCUTS —
-    * replaces l(v) with l(l(v)), compressing pointer chains through
-    * LABEL space, so the distance the minimum has traveled grows
-    * geometrically instead of linearly. Alternating keeps near-clique
-    * dup farms at exactly plain propagation's cost (they converge in 2
-    * hook rounds, before any shortcut runs), while a diameter-D
-    * contamination CHAIN (the shape Amplify's chain mode certifies)
-    * finishes in O(log D) rounds instead of D. `maxIter` is the
-    * backstop.
-    *
-    * Labels are always node ids of the same component (min of node ids
-    * under hook; l(l(v)) under shortcut), so the parent lookup always
-    * hits, labels decrease monotonically, and the fixpoint of the hook
-    * step alone already forces label = component minimum — the shortcut
-    * only accelerates, never changes, the answer (the recursive-CTE hash
-    * gate on q_dedup_clusters pins this).
-    *
-    * Scale shape: each round is one edge equi-join + one groupBy(min) on
-    * the node id (hook) plus one node-sized self-join (shortcut), with
-    * each round's labels materialized and the previous released; the only
-    * thing that ever reaches the driver is the changed-row COUNT (the
-    * convergence test). This is the standard large-scale dedup clustering
-    * step (a pair list alone doesn't say which docs to drop — the cluster
-    * id does: keep min(doc_id) per cluster, drop the rest). */
-  def connectedComponents(edges: DataFrame, maxIter: Int = 50): DataFrame = {
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val sym = edges.select(col("a"), col("b"))
-      .unionByName(edges.select(col("b").as("a"), col("a").as("b")))
-      .persist(lvl)
-    // seed = round one, join-free: min of self and direct neighbors
-    var labels = sym.groupBy(col("a").as("id")).agg(min(col("b")).as("mb"))
-      .select(col("id"), least(col("id"), col("mb")).as("label"))
-      .persist(lvl)
-    var converged = false
-    var i = 0
-    while (!converged && i < maxIter) {
-      val nbrMin = sym
-        .join(labels.select(col("id").as("b"), col("label").as("nl")), Seq("b"))
-        .groupBy(col("a").as("id")).agg(min(col("nl")).as("nl"))
-      // `prev` is aliased BEFORE the new `label`: a lateral alias named
-      // `label` later in the same select would shadow the input column.
-      val hooked = labels.join(nbrMin, Seq("id"), "left_outer")
-        .select(col("id"), col("label").as("prev"),
-          least(col("label"), coalesce(col("nl"), col("label"))).as("lh"))
-      // shortcut l(v) ← min(l(v), l(l(v))) on ALTERNATE rounds only: a
-      // near-clique dup farm converges in 2 hook rounds and never pays
-      // the extra materialization + self-join, while a deep chain still
-      // compresses geometrically (hook, hook+shortcut, … is O(log d) —
-      // the chain-mode ladder certifies it). When the shortcut runs,
-      // hooked materializes (localCheckpoint) because the self-join
-      // reads it from TWO positions.
-      val next = (if (i % 2 == 1) {
-        val h = hooked.localCheckpoint(true)
-        h.join(h.select(col("id").as("pid"), col("lh").as("pl")),
-            col("lh") === col("pid"), "left_outer")
-          .select(col("id"), col("prev"),
-            least(col("lh"), coalesce(col("pl"), col("lh"))).as("label"))
-      } else hooked.select(col("id"), col("prev"), col("lh").as("label")))
-        .persist(lvl)
-      converged = next.filter(col("label") =!= col("prev")).limit(1).count() == 0
-      labels.unpersist()
-      labels = next.select("id", "label")
-      i += 1
+  /** Edge count up to which [[connectedComponents]] collects the edges
+    * and solves them on the driver (the q_keywords take(limit + 1)
+    * convention). */
+  val CcLocalLimit: Int = 1 << 20
+
+  /** Backstop on [[ccDistributed]]'s rounds. Pointer jumping makes the
+    * rounds needed O(log diameter), so a converging graph stops long
+    * before the cap. */
+  val CcRoundCap = 50
+
+  /** Connected components over an undirected edge list `(a, b)` with
+    * LONG or INT endpoints: one `(id, label)` row per node, both in the
+    * endpoints' type, where `label` is the minimum node id of the node's
+    * component. The edges are probed with `take(CcLocalLimit + 1)`: when
+    * they fit, [[ccLocal]]'s union-find runs on the driver; above the
+    * limit, [[ccDistributed]] runs fused hook-hook-shortcut rounds to the
+    * fixpoint, with [[CcRoundCap]] as a backstop only. Union-by-min and
+    * the min-label fixpoint both give component minima, so the path never
+    * changes the answer. This is the large-scale dedup clustering step: a
+    * pair list alone doesn't say which docs to drop — the cluster id
+    * does (keep min(doc_id) per cluster, drop the rest). */
+  def connectedComponents(edges: DataFrame): DataFrame = {
+    val e = edges.select(col("a"), col("b"))
+    val head = e.take(CcLocalLimit + 1)
+    if (head.length > CcLocalLimit) return ccDistributed(e)
+    def node(v: Any): Long = v match {
+      case l: java.lang.Long => l
+      case i: java.lang.Integer => i.longValue
+      case other => throw new IllegalArgumentException(
+        s"connectedComponents: endpoint $other is not LONG or INT")
     }
-    sym.unpersist()
+    val kt = e.schema("a").dataType
+    import e.sparkSession.implicits._
+    ccLocal(head.toSeq.map(r => (node(r.get(0)), node(r.get(1)))))
+      .toDF("id", "label")
+      .select(col("id").cast(kt).as("id"), col("label").cast(kt).as("label"))
+  }
+
+  /** The distributed min-label loop behind [[connectedComponents]]
+    * (Shiloach–Vishkin hook + shortcut, the O(log n)-round contraction
+    * class of Kiveris et al. 2014's small-star/large-star). Labels start
+    * as node ids; a round is two HOOKS (min over self and neighbors'
+    * labels, one edge join + groupBy each) and one SHORTCUT (l(v) ←
+    * l(l(v)), one node-sized self-join), composed into one plan and
+    * materialized once. Labels are always node ids of the same component
+    * and only decrease, so a round with no lowered label means the hook
+    * fixpoint holds: every label is its component's minimum. */
+  private[graft] def ccDistributed(edges: DataFrame): DataFrame = {
+    // localCheckpoint, not persist (the clustersOf rationale): round k's
+    // plan starts from materialized blocks instead of re-analyzing
+    // rounds 1..k−1
+    val adj = edges.select(col("a"), col("b"))
+      .unionByName(edges.select(col("b").as("a"), col("a").as("b")))
+      .localCheckpoint(true)
+    var labels = adj.select(col("a").as("id")).distinct()
+      .select(col("id"), col("id").as("label"))
+      .localCheckpoint(true)
+    def hook(lbl: DataFrame): DataFrame = {
+      val nbrMin = adj
+        .join(lbl.select(col("id").as("b"), col("label").as("nl")), Seq("b"))
+        .groupBy(col("a").as("id")).agg(min(col("nl")).as("nl"))
+      lbl.join(nbrMin, Seq("id"), "left_outer")
+        .select(col("id"),
+          least(col("label"), coalesce(col("nl"), col("label"))).as("label"))
+    }
+    var changed = true
+    var round = 0
+    while (changed && round < CcRoundCap) {
+      val h2 = hook(hook(labels))
+      val next = h2
+        .join(h2.select(col("id").as("pid"), col("label").as("pl")),
+          col("label") === col("pid"), "left_outer")
+        .select(col("id"),
+          least(col("label"), coalesce(col("pl"), col("label"))).as("l2"))
+        .join(labels.select(col("id"), col("label").as("prev")), Seq("id"))
+        .select(col("id"), col("l2").as("label"), col("prev"))
+        .localCheckpoint(true)
+      changed = next.filter(col("label") < col("prev")).limit(1).count() > 0
+      labels = next.select("id", "label")
+      round += 1
+    }
     labels
   }
 
   /** Driver-side min-root union-find over a collected Long edge list —
-    * the local twin of [[connectedComponents]] for graphs already PROBED
-    * to be bounded (the pageRankLocal/q_keywords take(limit+1) pattern).
-    * Union-by-min keeps every root the minimum of its component, so the
-    * output labels match the distributed loop's exactly. */
+    * [[connectedComponents]]'s local path. Union-by-min keeps every root
+    * the minimum of its component, so the output labels match
+    * [[ccDistributed]]'s exactly. */
   def ccLocal(edges: Seq[(Long, Long)]): Seq[(Long, Long)] = {
     val parent = scala.collection.mutable.Map.empty[Long, Long]
     def find(x: Long): Long = {
@@ -1123,10 +1132,10 @@ object Dedup extends QueryModule {
         .localCheckpoint(true)
     }
 
-  /** Cluster labels memoized per (session, dir): the iterative
-    * min-label-propagation loop (dozens of jobs) runs ONCE even though two
-    * gated queries (q_dedup_clusters, q_split_leakfree) consume it — the
-    * docShingles shared-hot-stage rule. */
+  /** Cluster labels memoized per (session, dir): connected components
+    * run ONCE even though two gated queries (q_dedup_clusters,
+    * q_split_leakfree) consume them — the docShingles shared-hot-stage
+    * rule. */
   private def clustersOf(s: SparkSession, dir: String): DataFrame =
     graft.ModelCache.getOrElseUpdate(s, s"dedup.clusters:$dir") {
       // localCheckpoint, not persist (r21): persist keeps the CC fold's
@@ -1238,7 +1247,7 @@ object Dedup extends QueryModule {
     * threshold tightening would orphan). Distributed multi-source BFS:
     * seed = the canonical nodes, each round ONE equi-join of the current
     * distance map against the symmetric edge list + a min-groupBy — the
-    * same shape/persist discipline as connectedComponents; only the
+    * same round shape as connectedComponents' hook; only the
     * reached-node COUNT hits the driver (BFS layering makes first-reach
     * minimal, so convergence = no new nodes). Hash-gated against a
     * DuckDB recursive-CTE shortest-path with the same depth cap. */

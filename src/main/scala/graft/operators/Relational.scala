@@ -843,106 +843,24 @@ object Relational extends QueryModule {
          round(aa, 6) AS adamic_adar
        FROM cand JOIN deg da ON da.node = pa JOIN deg db ON db.node = pb"""
 
-  /** Round cap for [[qConnectedComponents]]'s label propagation: with the
-    * pointer-jumping shortcut each round, rounds needed = O(log diameter)
-    * (the chain-mode Amplify ladder certifies this), and the loop breaks
-    * on the first converged round — the cap only bounds pathology. */
-  val CcMaxRounds = 50
-
   /** q_connected_components: connected components of the co-purchase
     * graph — the graph-topology member the recommender family was
     * missing (q_copurchase counts edges, q_item_sim normalizes them,
     * q_link_pred scores wedges, q_als factorizes; components answer
     * "which items form one connected market at all", the partitioning a
-    * catalog team uses to shard recommendation models). Spark side is
-    * iterative MIN-LABEL propagation to a fixpoint: labels start as node
-    * ids, each round takes the min over the closed neighborhood
-    * (self ∪ neighbors), and the loop breaks on the first round with
-    * zero changed labels — every iteration is one dimension-sized
-    * shuffle join (the fact table was left behind at the basket
-    * aggregate), re-persisted and lineage-cut per round, with a
-    * pointer-jumping shortcut (l(v) ← l(l(v)), one node-sized self-join)
-    * every SECOND round — the Shiloach–Vishkin hook/shortcut discipline,
-    * same O(log n)-round contraction class as Kiveris et al. 2014's
-    * small-star/large-star: rounds = O(log diameter), not diameter, so a
-    * chained 100 TB graph converges in tens of rounds, not thousands,
-    * while small-diameter graphs converge before any shortcut runs and
-    * pay nothing extra. The component id is the
-    * MINIMUM part id of the component — deterministic, no RNG — so the
-    * full (part → component, size) mapping hash-gates against a DuckDB
-    * recursive-CTE reachability closure (min reachable id per node):
-    * same semantics, entirely different algorithm, which is exactly what
-    * the gate is for. */
+    * catalog team uses to shard recommendation models). The components
+    * come from [[Dedup.connectedComponents]] over the dimension-sized
+    * edge set (the fact table was left behind at the basket aggregate),
+    * plus one size join. The component id is the MINIMUM part id of the
+    * component — deterministic, no RNG — so the full (part → component,
+    * size) mapping hash-gates against a DuckDB recursive-CTE reachability
+    * closure (min reachable id per node): same semantics, entirely
+    * different algorithm, which is exactly what the gate is for. */
   def qConnectedComponents(s: SparkSession, dir: String): DataFrame = {
-    val edges = copurchasePairs(s, dir).select("a", "b")
-    // Probe-gated local fold (r22 — the ccFoldBatch/q_keywords
-    // take(limit+1) convention): the co-purchase edge set is DIMENSION-
-    // sized (the fact table was left behind at the basket aggregate), so
-    // when the probe proves it bounded the min-root union-find runs
-    // driver-side — at sf0.1 the distributed loop was ~10 sequential
-    // driver-bound execs over a 1,880-node graph (scaling block: 8 cores
-    // beat 32). Above the limit the distributed hook/shortcut loop below
-    // is the path, exactly as ccFoldBatch's quotient fold. Union-by-min
-    // yields the identical min-label fixpoint (DuckDB gate unchanged).
-    val eHead = edges.take(CcIncrLocalLimit + 1)
-    if (eHead.length <= CcIncrLocalLimit) {
-      import s.implicits._
-      val labels = Dedup.ccLocal(eHead.toSeq.map(r => (r.getLong(0), r.getLong(1))))
-        .toDF("part", "component")
-      val sizes = labels.groupBy("component").agg(count(lit(1)).as("comp_size"))
-      return labels.join(sizes, Seq("component"))
-        .select(col("part"), col("component"), col("comp_size"))
-    }
-    // localCheckpoint (the Bpe/Wordpiece loop discipline): each round's
-    // labels are MATERIALIZED and their lineage truncated, so round k's
-    // plan never re-analyzes rounds 1..k−1 and the driver doesn't
-    // accumulate one broadcast per survived round.
-    val adj = edges
-      .unionByName(edges.select(col("b").as("a"), col("a").as("b")))
-      .localCheckpoint(true)
-    var labels = adj.select(col("a").as("node")).distinct()
-      .select(col("node"), col("node").as("comp"))
-      .localCheckpoint(true)
-    var round = 0
-    var changed = 1L
-    // TWO hooks + one shortcut per MATERIALIZED round (r22): the r21
-    // loop ran one job per hook, one per convergence count, and a third
-    // per alternate-round shortcut — ~19 sequential driver-bound execs
-    // at sf0.1 (scaling block: 8 cores BEAT 32, pure job-count latency).
-    // Folding hook∘hook∘shortcut into one lazily-composed plan per
-    // round halves the checkpoint/count barriers for the same total
-    // compute; the shortcut's two reads of the second hook share their
-    // exchanges (ReuseExchange) inside the single job. Fixpoint
-    // unchanged: hooks/shortcuts only ever lower labels toward the
-    // component minimum, and a round with zero changes implies the
-    // single-hook fixpoint (labels = component minima) already held.
-    def hook(lbl: DataFrame): DataFrame = {
-      val nbrMin = adj
-        .join(lbl.select(col("node").as("b"), col("comp").as("nc")),
-          Seq("b"))
-        .groupBy(col("a").as("node")).agg(min(col("nc")).as("nbr_min"))
-      lbl.join(nbrMin, Seq("node"), "left_outer")
-        .select(col("node"),
-          least(col("comp"), coalesce(col("nbr_min"), col("comp")))
-            .as("comp"))
-    }
-    while (changed > 0 && round < CcMaxRounds) {
-      val h2 = hook(hook(labels))
-      val next = h2
-        .join(h2.select(col("node").as("pid"), col("comp").as("pc")),
-          col("comp") === col("pid"), "left_outer")
-        .select(col("node"),
-          least(col("comp"), coalesce(col("pc"), col("comp"))).as("comp2"))
-        .join(labels.select(col("node"), col("comp").as("prev")), Seq("node"))
-        .select(col("node"), col("comp2").as("comp"), col("prev"))
-        .localCheckpoint(true)
-      changed = next.filter(col("comp") < col("prev")).limit(1).count()
-      labels = next.select("node", "comp")
-      round += 1
-    }
-    val sizes = labels.groupBy("comp").agg(count(lit(1)).as("comp_size"))
-    labels.join(sizes, Seq("comp"))
-      .select(col("node").as("part"), col("comp").as("component"),
+    val labels = Dedup.connectedComponents(copurchasePairs(s, dir))
+    val sizes = labels.groupBy("label").agg(count(lit(1)).as("comp_size"))
+    labels.join(sizes, Seq("label"))
+      .select(col("id").as("part"), col("label").as("component"),
         col("comp_size"))
   }
 
@@ -969,10 +887,6 @@ object Relational extends QueryModule {
     * cutoff are the accumulated "state", the rest are the day's delta
     * (~80/20 on the driver calendar). */
   val CcIncrCutoff = "2000-06-01"
-
-  /** Local-vs-distributed threshold for the quotient CC (the
-    * KeywordsEdgeLimit convention). */
-  val CcIncrLocalLimit: Int = 1 << 20
 
   /** q_cc_incremental: INCREMENTAL connected-components maintenance —
     * the pattern a 100 TB graph actually runs daily (recomputing CC over
@@ -1073,16 +987,13 @@ object Relational extends QueryModule {
     * recompute), `deltaEdges` (a, b) the batch's new edges; returns the
     * merged (id, label) state. QUOTIENT contraction: map each Δ endpoint
     * to its base component label (new nodes map to themselves), run CC
-    * over the |Δ|-sized quotient only (locally under the probe limit —
-    * the q_keywords take(limit+1) pattern; union-by-min gives the
-    * identical min labels — distributed above it), then one join re-maps
-    * the base labels. Quotient node ids are base labels (each = the MIN
+    * over the |Δ|-sized quotient only, then one join re-maps the base
+    * labels. Quotient node ids are base labels (each = the MIN
     * of its base component) or new node ids, so the quotient min IS the
     * merged component's global min. StreamingSpec folds edge
     * micro-batches through this and pins equality with the one-shot
     * loop. */
   def ccFoldBatch(prevLabels: DataFrame, deltaEdges: DataFrame): DataFrame = {
-    val s = deltaEdges.sparkSession
     val quotient = deltaEdges
       .join(prevLabels.select(col("id").as("a"), col("label").as("la")),
         Seq("a"), "left_outer")
@@ -1091,14 +1002,8 @@ object Relational extends QueryModule {
       .select(coalesce(col("la"), col("a")).as("a"),
         coalesce(col("lb"), col("b")).as("b"))
       .filter(col("a") =!= col("b"))
-    val qHead = quotient.take(CcIncrLocalLimit + 1)
-    val qLabels =
-      if (qHead.length <= CcIncrLocalLimit) {
-        import s.implicits._
-        Dedup.ccLocal(qHead.toSeq.map(r => (r.getLong(0), r.getLong(1))))
-          .toDF("qid", "qlabel")
-      } else Dedup.connectedComponents(quotient)
-        .select(col("id").as("qid"), col("label").as("qlabel"))
+    val qLabels = Dedup.connectedComponents(quotient)
+      .select(col("id").as("qid"), col("label").as("qlabel"))
     // final labels: base nodes re-map through their (possibly merged)
     // base label; Δ-only nodes enter as themselves
     val newNodes = deltaEdges.select(col("a").as("id"))

@@ -1,6 +1,7 @@
 package graft
 
 import graft.operators.{Dedup, Relational, TextAnalysis}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Round-6 operators: connected-components dedup clusters, as-of join,
@@ -33,22 +34,52 @@ class Round6Spec extends SparkSpec {
 
   // ---------------- connected components ----------------
 
-  test("connectedComponents labels a path graph in min-label, multi-hop") {
+  // Each graph runs through connectedComponents (the driver-side path:
+  // every test graph is far below Dedup.CcLocalLimit) and through the
+  // distributed loop called directly, which no test-sized input reaches
+  // otherwise.
+  private def longEdges(es: Seq[(Long, Long)]): () => DataFrame = () => {
     import spark.implicits._
-    // path 1-2-3-4-5 forces label 1 to travel 4 hops; plus an isolated
-    // edge {10, 11} and its min label
-    val edges = Seq((2L, 1L), (2L, 3L), (4L, 3L), (4L, 5L), (11L, 10L)).toDF("a", "b")
-    val got = Dedup.connectedComponents(edges)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(got === Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L, 5L -> 1L,
-      10L -> 10L, 11L -> 10L))
+    es.toDF("a", "b")
   }
+  private val ccGraphs: Seq[(String, () => DataFrame)] = Seq(
+    // label 1 travels 4 hops along the path
+    "a path plus an isolated edge" -> longEdges(
+      Seq((2L, 1L), (2L, 3L), (4L, 3L), (4L, 5L), (11L, 10L))),
+    "a 64-node chain" -> longEdges((1L until 64L).map(i => (i + 1, i))),
+    "a star" -> longEdges(((1L to 4L) ++ (6L to 10L)).map(i => (5L, i))),
+    "a 6-clique" -> longEdges(for (i <- 1L to 6L; j <- i + 1 to 6L) yield (j, i)),
+    "a self-loop" -> longEdges(Seq((7L, 7L), (9L, 9L), (9L, 8L))),
+    "an empty edge list" -> longEdges(Seq.empty),
+    "an INT-keyed graph" -> (() => {
+      import spark.implicits._
+      Seq((3, 1), (3, 2), (20, 21)).toDF("a", "b")
+    }))
 
-  test("connectedComponents on an empty edge list returns no labels") {
-    import spark.implicits._
-    val empty = Seq.empty[(Long, Long)].toDF("a", "b")
-    assert(Dedup.connectedComponents(empty).count() === 0)
-  }
+  for ((name, graph) <- ccGraphs)
+    test(s"connectedComponents, both paths: $name") {
+      val edges = graph()
+      val local = Dedup.connectedComponents(edges)
+      val dist = Dedup.ccDistributed(edges)
+      assert(local.schema === dist.schema)
+      assert(local.schema.map(_.dataType) === Seq.fill(2)(edges.schema("a").dataType))
+      def pairs(df: DataFrame): Set[(Long, Long)] = df.collect()
+        .map(r => r.getAs[Number](0).longValue -> r.getAs[Number](1).longValue).toSet
+      assert(pairs(local) === pairs(dist))
+      // reference: every endpoint is labeled with its component's minimum
+      val es = pairs(edges).toSeq
+      val nbrs = (es ++ es.map(_.swap)).groupMap(_._1)(_._2)
+      def component(v: Long): Set[Long] = {
+        var seen = Set(v)
+        var frontier = Set(v)
+        while (frontier.nonEmpty) {
+          frontier = frontier.flatMap(nbrs) -- seen
+          seen ++= frontier
+        }
+        seen
+      }
+      assert(pairs(local) === nbrs.keySet.map(v => v -> component(v).min))
+    }
 
   test("global row numbers are invariant to input partitioning") {
     import spark.implicits._
