@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Benchmark main: headline queries on SPARK_GRAFT_SF_DIR, one JSON line.
   * Heavy ML-training queries are excluded from the headline set (they have
@@ -137,6 +137,24 @@ object Bench {
           (sel -- Headline.toSet).toSeq.sorted.filter(qs.contains)
       case None => Headline.filter(qs.contains)
     }
+    val (times, errors) = timeQueries(spark, sfDir, qs, names, reps)
+    val (line, compact, sidecar) =
+      report(sfDir, names, times, errors, ModelCache.buildCosts(spark).toMap)
+    println(line)
+    println(compact)
+    val out = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "BENCH_QUERIES.json")
+    try java.nio.file.Files.write(java.nio.file.Paths.get(out),
+      sidecar.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    catch { case e: Throwable =>
+      System.err.println(s"bench: could not write $out: $e") }
+    spark.stop()
+  }
+
+  /** Each query's rep times (latest first) and, for a query with NO
+    * successful rep, the class of its last exception. */
+  private[graft] def timeQueries(spark: SparkSession, sfDir: String,
+      qs: Map[String, (SparkSession, String) => DataFrame], names: Seq[String],
+      reps: Int): (Map[String, List[Double]], Map[String, String]) = {
     // INTERLEAVED rep rounds (A,B,C,A,B,C — not A,A,A,B,B,B): a transient
     // contention spike (GC pause, page-cache eviction, a co-tenant burst)
     // lands in one round and the per-query median absorbs it, instead of
@@ -150,6 +168,7 @@ object Bench {
     // position tax on unchanged code. Rotation spreads the boundary cost
     // across the suite so min-of-reps needs only one clean placement.
     val times = scala.collection.mutable.Map.empty[String, List[Double]]
+    val errs = scala.collection.mutable.Map.empty[String, String]
     for (r <- 0 until reps;
          offset = if (names.isEmpty) 0 else (r.toLong * names.size / reps).toInt;
          name <- names.drop(offset) ++ names.take(offset)) {
@@ -157,10 +176,23 @@ object Bench {
         val t0 = System.nanoTime()
         qs(name)(spark, sfDir).write.format("noop").mode("overwrite").save()
         times(name) = ((System.nanoTime() - t0) / 1e9) :: times.getOrElse(name, Nil)
-      } catch { case scala.util.control.NonFatal(_) => () }
+      } catch { case scala.util.control.NonFatal(e) =>
+        errs(name) = e.getClass.getSimpleName
+      }
       // NonFatal only (r20 ADVICE, BenchMl twin): a fatal JVM error must
       // abort the run, not leave a corrupted JVM timing every later query
     }
+    (times.toMap, errs.toMap -- times.keys)
+  }
+
+  /** The headline line, the compact line and the sidecar. A failed
+    * query is listed under `"errors"` only, so it cannot lower the total. */
+  private[graft] def report(sfDir: String, names: Seq[String],
+      times: Map[String, List[Double]], errors: Map[String, String],
+      buildCosts: Map[String, Double]): (String, String, String) = {
+    def obj(kvs: Seq[(String, Any)]): String =
+      kvs.map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
+    val ran = names.filter(times.contains)
     // Headline statistic is MIN-of-reps, not the median: with only 3
     // interleaved reps a 2-rep contention burst lands IN the median
     // (r10: q_bootstrap [24.5, 24.3, 2.9] → median 24.3 on unchanged
@@ -168,19 +200,11 @@ object Bench {
     // the query demonstrably CAN run that fast, so anything above it is
     // machine noise, not plan cost. Medians stay in the sidecar for
     // spread-watching.
-    val results = names.map { name =>
-      val ts = times.getOrElse(name, Nil)
-      name -> (if (ts.isEmpty) -1.0 else ts.min)
-    }
-    val medians = names.map { name =>
-      val ts = times.getOrElse(name, Nil)
-      name -> (if (ts.isEmpty) -1.0 else ts.sorted.apply(ts.size / 2))
-    }
-    val qjson = results.map { case (k, v) => "\"" + k + "\":" + v }
-      .mkString("{", ",", "}")
+    val results = ran.map(n => n -> times(n).min)
+    val medians = ran.map { n => val ts = times(n).sorted; n -> ts(ts.size / 2) }
+    val errJson = obj(errors.toSeq.sorted.map { case (k, v) => k -> ("\"" + v + "\"") })
     val total = results.map(_._2).sum
-    val line = s"""{"metric":"total","value":$total,"unit":"sec","stat":"min-of-reps","queries":$qjson,"sf":"$sfDir"}"""
-    println(line)
+    val line = s"""{"metric":"total","value":$total,"unit":"sec","stat":"min-of-reps","queries":${obj(results)},"errors":$errJson,"sf":"$sfDir"}"""
     // COMPACT trailing line (r16): the driver's round artifact keeps only
     // the last ~2000 chars of stdout, and the full per-query line above
     // has been ~9 KB since r12 — every BENCH_rN.json since then recorded
@@ -188,37 +212,25 @@ object Bench {
     // plus the slowest-10 subset and FITS in the captured tail, so the
     // round artifact parses again; the complete per-query map stays in
     // the line above and in the BENCH_QUERIES.json sidecar.
-    val slowest = results.sortBy(-_._2).take(10)
-      .map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
-    println(s"""{"metric":"total","value":$total,"unit":"sec","stat":"min-of-reps","n_queries":${results.size},"queries":$slowest,"queries_note":"slowest-10 of ${results.size}; full map in BENCH_QUERIES.json","sf":"$sfDir"}""")
+    val slowest = obj(results.sortBy(-_._2).take(10))
+    val compact = s"""{"metric":"total","value":$total,"unit":"sec","stat":"min-of-reps","n_queries":${results.size},"n_errors":${errors.size},"queries":$slowest,"queries_note":"slowest-10 of ${results.size}; full map in BENCH_QUERIES.json","sf":"$sfDir"}"""
     // The stdout line gets truncated by log captures once the suite is
     // hundreds of queries (r9: 180 of 256 medians lost to the tail), so
     // the FULL result — min-of-reps headline, medians, plus every
     // interleaved rep, so a reader can judge spread — also lands in a
     // sidecar file for round-over-round per-query diffing.
-    val repsJson = names.map { name =>
-      val ts = times.getOrElse(name, Nil).reverse
-      "\"" + name + "\":" + ts.mkString("[", ",", "]")
-    }.mkString("{", ",", "}")
-    val medJson = medians.map { case (k, v) => "\"" + k + "\":" + v }
-      .mkString("{", ",", "}")
+    val repsJson = obj(ran.map(n => n -> times(n).reverse.mkString("[", ",", "]")))
     // Substrate build-cost attribution (r21 verdict item 6): min-of-reps
     // charges each memoized ModelCache substrate's build to whichever
     // query reaches it first in rep 1, so per-query numbers for family
     // members understate standalone cost — the sidecar reports every
     // substrate's one-time build seconds so readers can re-attribute.
     // (For lazily persisted substrates this is plan-build time only; the
-    // first consumer's rep still carries the fill.)
-    val subJson = ModelCache.buildCosts(spark).toSeq.sortBy(-_._2)
-      .map { case (k, v) => "\"" + k + "\":" + f"$v%.3f" }
-      .mkString("{", ",", "}")
-    val out = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "BENCH_QUERIES.json")
-    try java.nio.file.Files.write(java.nio.file.Paths.get(out),
-      (line.dropRight(1) +
-        s""","medians":$medJson,"substrate_build_sec":$subJson,"reps":$repsJson}""" + "\n")
-        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    catch { case e: Throwable =>
-      System.err.println(s"bench: could not write $out: $e") }
-    spark.stop()
+    // first consumer's rep still carries the fill.) Locale.ROOT: the
+    // default locale may write a decimal comma, which is not JSON.
+    val subJson = obj(buildCosts.toSeq.sortBy(-_._2)
+      .map { case (k, v) => k -> "%.3f".formatLocal(java.util.Locale.ROOT, v) })
+    (line, compact, line.dropRight(1) +
+      s""","medians":${obj(medians)},"substrate_build_sec":$subJson,"reps":$repsJson}""" + "\n")
   }
 }

@@ -3,8 +3,9 @@ package graft.operators
 import graft.QueryModule
 import graft.functions.TextFns
 import graft.sources.Tables
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, StructField, StructType}
 
 /** Deduplication family for training-data pipelines.
   *
@@ -991,20 +992,40 @@ object Dedup extends QueryModule {
 
   // ---------------- Duplicate-cluster assembly ----------------
 
-  /** Edge count up to which [[connectedComponents]] collects the edges
-    * and solves them on the driver (the q_keywords take(limit + 1)
-    * convention). */
-  val CcLocalLimit: Int = 1 << 20
+  /** Edge count up to which [[connectedComponents]] and [[pageRank]]
+    * collect the edges and solve them on the driver. */
+  val LocalEdgeLimit: Int = 1 << 20
 
   /** Backstop on [[ccDistributed]]'s rounds. Pointer jumping makes the
     * rounds needed O(log diameter), so a converging graph stops long
     * before the cap. */
   val CcRoundCap = 50
 
+  /** The round driver of every distributed graph loop: runs `step` on
+    * the previous round's state, starting from `init`, at most `cap`
+    * times. Each round is an eager `localCheckpoint`, not `persist`, so
+    * round k's plan starts from round k−1's blocks instead of nesting k
+    * copies of the upstream pipeline for Catalyst to re-analyze on every
+    * action (pure driver time, growing exponentially with k). With
+    * `changed`, the loop stops after the first round `i` (from 1) whose
+    * output has no row matching `changed(i)`, one `limit(1).count()`. */
+  private[graft] def iterate(init: DataFrame, cap: Int)(step: DataFrame => DataFrame)(
+      changed: Option[Int => Column] = None): DataFrame = {
+    var cur = init.localCheckpoint(true)
+    var round = 0
+    var more = true
+    while (more && round < cap) {
+      cur = step(cur).localCheckpoint(true)
+      round += 1
+      more = changed.forall(c => cur.filter(c(round)).limit(1).count() > 0)
+    }
+    cur
+  }
+
   /** Connected components over an undirected edge list `(a, b)` with
     * LONG or INT endpoints: one `(id, label)` row per node, both in the
     * endpoints' type, where `label` is the minimum node id of the node's
-    * component. The edges are probed with `take(CcLocalLimit + 1)`: when
+    * component. The edges are probed with `take(LocalEdgeLimit + 1)`: when
     * they fit, [[ccLocal]]'s union-find runs on the driver; above the
     * limit, [[ccDistributed]] runs fused hook-hook-shortcut rounds to the
     * fixpoint, with [[CcRoundCap]] as a backstop only. Union-by-min and
@@ -1014,19 +1035,27 @@ object Dedup extends QueryModule {
     * does (keep min(doc_id) per cluster, drop the rest). */
   def connectedComponents(edges: DataFrame): DataFrame = {
     val e = edges.select(col("a"), col("b"))
-    val head = e.take(CcLocalLimit + 1)
-    if (head.length > CcLocalLimit) return ccDistributed(e)
-    def node(v: Any): Long = v match {
-      case l: java.lang.Long => l
+    localEdges(e, "LONG or INT") {
+      case l: java.lang.Long => l.longValue
       case i: java.lang.Integer => i.longValue
-      case other => throw new IllegalArgumentException(
-        s"connectedComponents: endpoint $other is not LONG or INT")
+    }.fold(ccDistributed(e)) { es =>
+      val kt = e.schema("a").dataType
+      import e.sparkSession.implicits._
+      ccLocal(es).toDF("id", "label")
+        .select(col("id").cast(kt).as("id"), col("label").cast(kt).as("label"))
     }
-    val kt = e.schema("a").dataType
-    import e.sparkSession.implicits._
-    ccLocal(head.toSeq.map(r => (node(r.get(0)), node(r.get(1)))))
-      .toDF("id", "label")
-      .select(col("id").cast(kt).as("id"), col("label").cast(kt).as("label"))
+  }
+
+  /** The local-path gate: `e`'s `(a, b)` rows read through `node` (any
+    * other endpoint fails loudly), or None when `take(LocalEdgeLimit + 1)`
+    * finds more rows than the limit. */
+  private def localEdges[K](e: DataFrame, kinds: String)(
+      node: PartialFunction[Any, K]): Option[Seq[(K, K)]] = {
+    def read(v: Any): K = node.applyOrElse(v, (o: Any) =>
+      throw new IllegalArgumentException(s"graph endpoint $o is not $kinds"))
+    val head = e.take(LocalEdgeLimit + 1)
+    if (head.length > LocalEdgeLimit) None
+    else Some(head.toSeq.map(r => (read(r.get(0)), read(r.get(1)))))
   }
 
   /** The distributed min-label loop behind [[connectedComponents]]
@@ -1039,14 +1068,8 @@ object Dedup extends QueryModule {
     * and only decrease, so a round with no lowered label means the hook
     * fixpoint holds: every label is its component's minimum. */
   private[graft] def ccDistributed(edges: DataFrame): DataFrame = {
-    // localCheckpoint, not persist (the clustersOf rationale): round k's
-    // plan starts from materialized blocks instead of re-analyzing
-    // rounds 1..k−1
     val adj = edges.select(col("a"), col("b"))
       .unionByName(edges.select(col("b").as("a"), col("a").as("b")))
-      .localCheckpoint(true)
-    var labels = adj.select(col("a").as("id")).distinct()
-      .select(col("id"), col("id").as("label"))
       .localCheckpoint(true)
     def hook(lbl: DataFrame): DataFrame = {
       val nbrMin = adj
@@ -1056,23 +1079,17 @@ object Dedup extends QueryModule {
         .select(col("id"),
           least(col("label"), coalesce(col("nl"), col("label"))).as("label"))
     }
-    var changed = true
-    var round = 0
-    while (changed && round < CcRoundCap) {
+    iterate(adj.select(col("a").as("id")).distinct()
+      .select(col("id"), col("id").as("label")), CcRoundCap) { cur =>
+      val labels = cur.select("id", "label")
       val h2 = hook(hook(labels))
-      val next = h2
-        .join(h2.select(col("id").as("pid"), col("label").as("pl")),
+      h2.join(h2.select(col("id").as("pid"), col("label").as("pl")),
           col("label") === col("pid"), "left_outer")
         .select(col("id"),
           least(col("label"), coalesce(col("pl"), col("label"))).as("l2"))
         .join(labels.select(col("id"), col("label").as("prev")), Seq("id"))
         .select(col("id"), col("l2").as("label"), col("prev"))
-        .localCheckpoint(true)
-      changed = next.filter(col("label") < col("prev")).limit(1).count() > 0
-      labels = next.select("id", "label")
-      round += 1
-    }
-    labels
+    }(Some(_ => col("label") < col("prev"))).select("id", "label")
   }
 
   /** Driver-side min-root union-find over a collected Long edge list —
@@ -1096,10 +1113,6 @@ object Dedup extends QueryModule {
     parent.keys.toSeq.map(k => k -> find(k))
   }
 
-  /** q_dedup_clusters: duplicate CLUSTERS from the exact-Jaccard pair
-    * graph — the operator that turns pairwise near-dup hits into a
-    * per-doc cluster assignment (cluster id = min doc_id reachable).
-    * Hash-gated against a DuckDB recursive-CTE transitive closure. */
   /** The exact-Jaccard pair graph as an (a < b) edge list, memoized +
     * persisted per session: the clusters query iterates over it and the
     * graph-stats query references it from six join positions — without
@@ -1148,6 +1161,10 @@ object Dedup extends QueryModule {
         .localCheckpoint(true)
     }
 
+  /** q_dedup_clusters: duplicate CLUSTERS from the exact-Jaccard pair
+    * graph — the operator that turns pairwise near-dup hits into a
+    * per-doc cluster assignment (cluster id = min doc_id reachable).
+    * Hash-gated against a DuckDB recursive-CTE transitive closure. */
   def qDedupClusters(s: SparkSession, dir: String): DataFrame =
     clustersOf(s, dir)
 
@@ -1244,46 +1261,29 @@ object Dedup extends QueryModule {
     * the "how far from the kept copy" diagnostic that distinguishes
     * direct near-dups (depth 1) from transitive ones (depth ≥ 2, members
     * only connected through intermediate revisions; the pairs a
-    * threshold tightening would orphan). Distributed multi-source BFS:
-    * seed = the canonical nodes, each round ONE equi-join of the current
-    * distance map against the symmetric edge list + a min-groupBy — the
-    * same round shape as connectedComponents' hook; only the
-    * reached-node COUNT hits the driver (BFS layering makes first-reach
-    * minimal, so convergence = no new nodes). Hash-gated against a
-    * DuckDB recursive-CTE shortest-path with the same depth cap. */
-  def qBfsDepth(s: SparkSession, dir: String): DataFrame = {
-    // localCheckpoint(eager) per round, NOT persist: each iteration's plan
-    // embeds the previous one's (which itself embeds the whole memoized
-    // pair pipeline via sym), so without lineage truncation Catalyst
-    // re-analyzes an exponentially growing tree — measured 6.5 s → 26 s
-    // per COUNT by round two at sf0.01 on cached 50-row inputs, pure
-    // planning cost. The checkpoint pins each round to its materialized
-    // blocks and the per-round job is milliseconds again (the
-    // connectedComponents/pageRank rule).
-    val edges = jaccardEdges(s, dir)
-    val sym = edges.unionByName(edges.select(col("b").as("a"), col("a").as("b")))
+    * threshold tightening would orphan). Hash-gated against a DuckDB
+    * recursive-CTE shortest-path with the same depth cap. */
+  def qBfsDepth(s: SparkSession, dir: String): DataFrame =
+    bfsDepth(jaccardEdges(s, dir), qDedupClusters(s, dir)
+      .filter(col("doc_id") === col("cluster_id")).select(col("doc_id").as("id")))
+
+  /** Multi-source BFS over an undirected (a, b) edge relation from
+    * `seeds`' `id` column: one `(doc_id, depth)` row per node within
+    * [[BfsMaxDepth]] hops. A round is ONE equi-join of the distance map
+    * against the symmetric edges + a min-groupBy; it re-expands the whole
+    * map, so the rows it adds are exactly those at depth i (first reach
+    * is minimal), and a round with no depth-i row ends the loop. */
+  def bfsDepth(edges: DataFrame, seeds: DataFrame): DataFrame = {
+    val sym = edges.select(col("a"), col("b"))
+      .unionByName(edges.select(col("b").as("a"), col("a").as("b")))
       .localCheckpoint(true)
-    var dist = qDedupClusters(s, dir)
-      .filter(col("doc_id") === col("cluster_id"))
-      .select(col("doc_id").as("id"), lit(0L).as("d"))
-      .localCheckpoint(true)
-    var total = dist.count()
-    var changed = true
-    var i = 0
-    while (changed && i < BfsMaxDepth) {
-      val nxt = sym
-        .join(dist.select(col("id").as("a"), col("d")), Seq("a"))
+    iterate(seeds.select(col("id"), lit(0L).as("d")), BfsMaxDepth) { dist =>
+      sym.join(dist.select(col("id").as("a"), col("d")), Seq("a"))
         .select(col("b").as("id"), (col("d") + 1L).as("d"))
         .unionByName(dist)
         .groupBy("id").agg(min(col("d")).as("d"))
-        .localCheckpoint(true)
-      val n = nxt.count()
-      changed = n != total
-      total = n
-      dist = nxt
-      i += 1
-    }
-    dist.select(col("id").as("doc_id"), col("d").cast("int").as("depth"))
+    }(Some(i => col("d") === i))
+      .select(col("id").as("doc_id"), col("d").cast("int").as("depth"))
   }
 
   private lazy val qBfsDepthSql =
@@ -1298,30 +1298,40 @@ object Dedup extends QueryModule {
        SELECT id AS doc_id, CAST(min(d) AS INT) AS depth
        FROM bfs GROUP BY id"""
 
-  /** Damped PageRank over an undirected edge list, fixed-iteration power
-    * method. Each round is ONE equi-join (out-edges ⋈ current ranks, with
-    * the source degree pre-attached) plus one aggregation — the classic
-    * distributed formulation; ranks materialize + persist per round and
-    * the previous round unpersists, so state stays two node-sized tables
-    * regardless of iteration count. No dangling mass: symmetrized edges
-    * give every node out-degree ≥ 1. Literals 0.15/0.85 are written
-    * identically in the DuckDB oracle (1−0.85 ≠ 0.15 in IEEE doubles —
-    * the same discipline as every shared constant). */
-  /** Driver-side power method over an edge list — the SAME math and
-    * iteration count as [[pageRank]], for graphs already known to be
-    * small (e.g. a vocabulary co-occurrence graph: node count is bounded
-    * by the vocabulary, not the corpus). Callers collect the edge list
-    * with a take(limit+1) probe and fall back to the distributed loop
-    * above the limit (the q_keywords pattern; KeywordsLocalSpec pins the
-    * two paths equal). */
-  def pageRankLocal(edges: Seq[(String, String)], iters: Int = 10): Seq[(String, Double)] = {
+  /** Damped PageRank over an undirected edge list `(a, b)` with LONG,
+    * INT or STRING endpoints, fixed-iteration power method: one `(id, r)`
+    * row per node, `id` in the endpoints' type. The edges are probed with
+    * `take(LocalEdgeLimit + 1)`: when they fit, [[pageRankLocal]] runs on
+    * the driver; above the limit, [[pageRankDistributed]] runs the same
+    * rounds as joins. No dangling mass: symmetrized edges give every node
+    * out-degree ≥ 1. Literals 0.15/0.85 are written identically in the
+    * DuckDB oracles (1−0.85 ≠ 0.15 in IEEE doubles — the same discipline
+    * as every shared constant). */
+  def pageRank(edges: DataFrame, iters: Int = 10): DataFrame = {
+    val e = edges.select(col("a"), col("b"))
+    localEdges(e, "LONG, INT or STRING") {
+      case k @ (_: java.lang.Long | _: java.lang.Integer | _: String) => k
+    }.fold(pageRankDistributed(e, iters)) { es =>
+      // the schema pageRankDistributed derives: symmetrized ids, aggregate r
+      val schema = StructType(Seq(StructField("id", e.schema("a").dataType,
+        e.schema("a").nullable || e.schema("b").nullable), StructField("r", DoubleType)))
+      import scala.jdk.CollectionConverters._
+      e.sparkSession.createDataFrame(
+        pageRankLocal(es, iters).map { case (k, r) => Row(k, r) }.asJava, schema)
+    }
+  }
+
+  /** Driver-side power method over a collected edge list — the SAME math
+    * and iteration count as [[pageRankDistributed]], for graphs that fit
+    * under [[LocalEdgeLimit]] ([[pageRank]]'s local path). */
+  def pageRankLocal[K](edges: Seq[(K, K)], iters: Int = 10): Seq[(K, Double)] = {
     val sym = edges ++ edges.map { case (a, b) => (b, a) }
-    val deg: Map[String, Long] =
+    val deg: Map[K, Long] =
       sym.groupBy(_._1).map { case (k, v) => k -> v.size.toLong }
     val n = deg.size
-    var ranks: Map[String, Double] = deg.map { case (k, _) => k -> 1.0 / n }
+    var ranks: Map[K, Double] = deg.map { case (k, _) => k -> 1.0 / n }
     for (_ <- 1 to iters) {
-      val contrib = scala.collection.mutable.Map.empty[String, Double]
+      val contrib = scala.collection.mutable.Map.empty[K, Double]
       sym.foreach { case (a, b) =>
         contrib(b) = contrib.getOrElse(b, 0.0) + ranks(a) / deg(a)
       }
@@ -1330,28 +1340,21 @@ object Dedup extends QueryModule {
     ranks.toSeq
   }
 
-  def pageRank(edges: DataFrame, iters: Int = 10): DataFrame = {
+  /** [[pageRank]]'s distributed path: each round is ONE equi-join
+    * (out-edges ⋈ current ranks, with the source degree pre-attached)
+    * plus one aggregation — the classic distributed formulation. */
+  private[graft] def pageRankDistributed(edges: DataFrame, iters: Int = 10): DataFrame = {
     val sym = edges.select(col("a"), col("b"))
       .unionByName(edges.select(col("b").as("a"), col("a").as("b")))
-    val deg = sym.groupBy("a").agg(count(lit(1)).as("deg"))
-    // localCheckpoint (eager) rather than persist: it TRUNCATES lineage,
-    // so iteration k's plan is one join over a materialized table — not k
-    // nested copies of the whole upstream pipeline (which blows up the
-    // driver during analysis long before executors see data)
+    val deg = sym.groupBy("a").agg(count(lit(1)).as("deg")).localCheckpoint(true)
+    val n = deg.count()
     val out = sym.join(deg, Seq("a"))
       .select(col("a"), col("b"), col("deg")).localCheckpoint(true)
-    val n = out.select("a").distinct().count()
-    var ranks = deg.select(col("a").as("id"), lit(1.0 / n).as("r")).localCheckpoint(true)
-    for (_ <- 1 to iters) {
-      val next = out
-        .join(ranks.select(col("id").as("a"), col("r")), Seq("a"))
+    iterate(deg.select(col("a").as("id"), lit(1.0 / n).as("r")), iters) { ranks =>
+      out.join(ranks.select(col("id").as("a"), col("r")), Seq("a"))
         .groupBy(col("b").as("id"))
-        .agg((lit(0.15) / n + lit(0.85) * sum(col("r") / col("deg"))).as("r"))
-        .localCheckpoint(true)
-      ranks.unpersist()
-      ranks = next
-    }
-    ranks
+        .agg((lit(0.15 / n) + lit(0.85) * sum(col("r") / col("deg"))).as("r"))
+    }()
   }
 
   /** q_pagerank: PageRank centrality of the near-dup graph — ranks the
@@ -3006,10 +3009,9 @@ object Dedup extends QueryModule {
     * the ones a threshold tightening orphans first — leaving the dense
     * dup-farm skeleton). Simultaneous peel: round i keeps nodes with
     * ≥ k neighbors INSIDE round i−1's survivor set; [[KCoreRounds]]
-    * rounds, each ONE node-keyed semi-join pair + count (edges
-    * checkpointed once, survivor sets node-sized, eager checkpoint per
-    * round — the connectedComponents lineage rule). The oracle unrolls
-    * the identical rounds as generated CTEs. Emits every graph node
+    * rounds of [[iterate]], each ONE node-keyed semi-join pair + count
+    * (edges checkpointed once, survivor sets node-sized). The oracle
+    * unrolls the identical rounds as generated CTEs. Emits every graph node
     * with its degree (hash-anchored) and core membership. */
   def qKcore(s: SparkSession, dir: String): DataFrame =
     kcoreOf(jaccardEdges(s, dir))
@@ -3020,17 +3022,15 @@ object Dedup extends QueryModule {
     val sym = edges.unionByName(edges.select(col("b").as("a"), col("a").as("b")))
       .localCheckpoint(true)
     val deg = sym.groupBy("a").agg(count(lit(1)).as("degree"))
-    var keep = deg.select("a").localCheckpoint(true)
-    for (_ <- 1 to KCoreRounds) {
-      keep = sym
+    val core = iterate(deg.select("a"), KCoreRounds) { keep =>
+      sym
         .join(keep, Seq("a"))
         .join(keep.select(col("a").as("b")), Seq("b"))
         .groupBy("a").agg(count(lit(1)).as("c"))
         .filter(col("c") >= KCoreK)
         .select("a")
-        .localCheckpoint(true)
-    }
-    deg.join(keep.withColumn("in_core", lit(true)), Seq("a"), "left")
+    }()
+    deg.join(core.withColumn("in_core", lit(true)), Seq("a"), "left")
       .select(col("a").as("doc_id"), col("degree"),
         coalesce(col("in_core"), lit(false)).as("in_core"))
   }

@@ -1412,9 +1412,9 @@ object Relational extends QueryModule {
     * point bit-exact in both engines (growth ~(deg_c·deg_p)^(k/2) ≈
     * 10³⁰ worst-case at k=8, far inside decimal range; overflow would
     * surface as NULL, not silent drift). Each round is ONE equi-join
-    * (adjacency ⋈ scores) + one aggregation, state two node-sized
-    * tables via eager localCheckpoint (the q_pagerank discipline); the
-    * oracle replays the identical iterations as a recursive CTE. */
+    * (adjacency ⋈ broadcast scores) + one aggregation, with one eager
+    * localCheckpoint after the last round (see hitsOf); the oracle
+    * replays the identical iterations as a recursive CTE. */
   def qHits(s: SparkSession, dir: String): DataFrame =
     // r22 A/B note: spreading the lineitem scan (§2.5) and fusing the
     // edge dedup into the tgt repartition (§2.4) were both measured and

@@ -1286,21 +1286,15 @@ object TextAnalysis extends QueryModule {
            ((CAST(ua.n_tok AS DOUBLE) / t.n_uni) * (CAST(ub.n_tok AS DOUBLE) / t.n_uni))), 6) >= 0.2"""
   }
 
-  /** Edge budget below which TextRank's power method runs on the driver:
-    * the co-occurrence graph is VOCABULARY-sized (≤ |V|² edges however
-    * big the corpus), so below ~1M edges the 10 distributed rounds are
-    * pure job overhead. Above it, Dedup.pageRank takes over — same math,
-    * spec-pinned equal. */
-  val KeywordsEdgeLimit: Int = 1 << 20
-
   /** q_keywords: TextRank keyword extraction — PageRank over the token
     * co-occurrence graph (adjacent clean tokens, distinct pairs with
     * support ≥ 2), top-20 by rank. The corpus-scale work (bigram counts)
-    * is one distributed aggregate; the vocab-sized power method runs
-    * local-below / distributed-above KeywordsEdgeLimit (the BPE hybrid
-    * pattern). The oracle re-runs the identical 10 iterations as a
-    * recursive CTE. Ties (and the top-20 cut) break on the rounded rank
-    * then the token, so both engines cut identically. */
+    * is one distributed aggregate; the power method is Dedup.pageRank,
+    * whose size gate keeps this vocabulary-sized graph (≤ |V|² edges
+    * however big the corpus) on the driver. The oracle re-runs the
+    * identical 10 iterations as a recursive CTE. Ties (and the top-20
+    * cut) break on the rounded rank then the token, so both engines cut
+    * identically. */
   def qKeywords(s: SparkSession, dir: String): DataFrame = {
     val edges = bigrams(s, dir)
       .filter(col("tok_a") =!= col("tok_b"))
@@ -1309,15 +1303,8 @@ object TextAnalysis extends QueryModule {
       .groupBy("a", "b").agg(count(lit(1)).as("n"))
       .filter(col("n") >= 2)
       .select("a", "b")
-    val head = edges.take(KeywordsEdgeLimit + 1)
-    val ranked =
-      if (head.length <= KeywordsEdgeLimit) {
-        import s.implicits._
-        Dedup.pageRankLocal(head.toSeq.map(r => (r.getString(0), r.getString(1))))
-          .toDF("token", "r")
-      } else Dedup.pageRank(edges).select(col("id").as("token"), col("r"))
-    ranked
-      .select(col("token"), round(col("r"), 6).as("textrank"))
+    Dedup.pageRank(edges)
+      .select(col("id").as("token"), round(col("r"), 6).as("textrank"))
       .orderBy(col("textrank").desc, col("token").asc)
       .limit(20)
   }

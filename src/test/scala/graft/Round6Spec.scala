@@ -32,20 +32,23 @@ class Round6Spec extends SparkSpec {
     assert(viaSql.getSeq[Long](3) === viaApi.getSeq[Long](3))
   }
 
-  // ---------------- connected components ----------------
+  // ---------------- graph kernels ----------------
 
-  // Each graph runs through connectedComponents (the driver-side path:
-  // every test graph is far below Dedup.CcLocalLimit) and through the
-  // distributed loop called directly, which no test-sized input reaches
-  // otherwise.
+  // Each graph runs through connectedComponents and pageRank (the
+  // driver-side paths: every test graph is far below
+  // Dedup.LocalEdgeLimit) and through their distributed loops called
+  // directly, which no test-sized input reaches otherwise; kcoreOf and
+  // bfsDepth, which always run distributed, are checked against plain
+  // driver-side references.
   private def longEdges(es: Seq[(Long, Long)]): () => DataFrame = () => {
     import spark.implicits._
     es.toDF("a", "b")
   }
-  private val ccGraphs: Seq[(String, () => DataFrame)] = Seq(
+  private val graphs: Seq[(String, () => DataFrame)] = Seq(
     // label 1 travels 4 hops along the path
     "a path plus an isolated edge" -> longEdges(
       Seq((2L, 1L), (2L, 3L), (4L, 3L), (4L, 5L), (11L, 10L))),
+    // longer than Dedup.BfsMaxDepth: the BFS cap cuts it
     "a 64-node chain" -> longEdges((1L until 64L).map(i => (i + 1, i))),
     "a star" -> longEdges(((1L to 4L) ++ (6L to 10L)).map(i => (5L, i))),
     "a 6-clique" -> longEdges(for (i <- 1L to 6L; j <- i + 1 to 6L) yield (j, i)),
@@ -56,30 +59,93 @@ class Round6Spec extends SparkSpec {
       Seq((3, 1), (3, 2), (20, 21)).toDF("a", "b")
     }))
 
-  for ((name, graph) <- ccGraphs)
+  private def pairs(df: DataFrame): Seq[(Long, Long)] = df.collect().toSeq
+    .map(r => r.getAs[Number](0).longValue -> r.getAs[Number](1).longValue)
+  /** Both directions of every edge, self-loops and repeats kept. */
+  private def symmetric(edges: DataFrame): Seq[(Long, Long)] = {
+    val es = pairs(edges)
+    es ++ es.map(_.swap)
+  }
+  private def component(nbrs: Map[Long, Seq[Long]], v: Long): Set[Long] = {
+    var seen = Set(v)
+    var frontier = Set(v)
+    while (frontier.nonEmpty) {
+      frontier = frontier.flatMap(nbrs) -- seen
+      seen ++= frontier
+    }
+    seen
+  }
+
+  private def checkPageRank(edges: DataFrame): Unit = {
+    val gated = Dedup.pageRank(edges)
+    val dist = Dedup.pageRankDistributed(edges)
+    assert(gated.schema === dist.schema)
+    assert(gated.schema("id").dataType === edges.schema("a").dataType)
+    def ranks(df: DataFrame): Map[Any, Double] =
+      df.collect().map(r => r.get(0) -> r.getDouble(1)).toMap
+    val (g, d) = (ranks(gated), ranks(dist))
+    assert(g.keySet === d.keySet)
+    g.foreach { case (k, v) => assert(math.abs(v - d(k)) < 1e-12, k) }
+    // rank mass is conserved (power method invariant)
+    if (g.nonEmpty) assert(math.abs(g.values.sum - 1.0) < 1e-9)
+  }
+
+  for ((name, graph) <- graphs) {
     test(s"connectedComponents, both paths: $name") {
       val edges = graph()
       val local = Dedup.connectedComponents(edges)
       val dist = Dedup.ccDistributed(edges)
       assert(local.schema === dist.schema)
       assert(local.schema.map(_.dataType) === Seq.fill(2)(edges.schema("a").dataType))
-      def pairs(df: DataFrame): Set[(Long, Long)] = df.collect()
-        .map(r => r.getAs[Number](0).longValue -> r.getAs[Number](1).longValue).toSet
-      assert(pairs(local) === pairs(dist))
+      assert(pairs(local).toSet === pairs(dist).toSet)
       // reference: every endpoint is labeled with its component's minimum
-      val es = pairs(edges).toSeq
-      val nbrs = (es ++ es.map(_.swap)).groupMap(_._1)(_._2)
-      def component(v: Long): Set[Long] = {
-        var seen = Set(v)
-        var frontier = Set(v)
-        while (frontier.nonEmpty) {
-          frontier = frontier.flatMap(nbrs) -- seen
-          seen ++= frontier
-        }
-        seen
-      }
-      assert(pairs(local) === nbrs.keySet.map(v => v -> component(v).min))
+      val nbrs = symmetric(edges).groupMap(_._1)(_._2)
+      assert(pairs(local).toSet === nbrs.keySet.map(v => v -> component(nbrs, v).min))
     }
+
+    test(s"pageRank, both paths: $name") {
+      checkPageRank(graph())
+    }
+
+    test(s"kcoreOf matches a simultaneous peel: $name") {
+      val edges = graph()
+      val sym = symmetric(edges)
+      var keep = sym.map(_._1).toSet
+      for (_ <- 1 to Dedup.KCoreRounds)
+        keep = sym.filter { case (a, b) => keep(a) && keep(b) }
+          .groupMapReduce(_._1)(_ => 1)(_ + _)
+          .collect { case (a, c) if c >= Dedup.KCoreK => a }.toSet
+      val want = sym.groupMapReduce(_._1)(_ => 1L)(_ + _)
+        .map { case (a, deg) => a -> (deg, keep(a)) }
+      val got = Dedup.kcoreOf(edges)
+      assert(got.schema("doc_id").dataType === edges.schema("a").dataType)
+      assert(got.collect().map(r => r.getAs[Number]("doc_id").longValue ->
+        (r.getAs[Long]("degree"), r.getAs[Boolean]("in_core"))).toMap === want)
+    }
+
+    test(s"bfsDepth from the component minima matches a capped BFS: $name") {
+      val edges = graph()
+      val seeds = Dedup.connectedComponents(edges)
+        .filter(col("id") === col("label")).select("id")
+      val nbrs = symmetric(edges).groupMap(_._1)(_._2)
+      var want = nbrs.keySet.filter(v => component(nbrs, v).min == v).map(_ -> 0).toMap
+      var frontier = want.keySet
+      for (d <- 1 to Dedup.BfsMaxDepth) {
+        frontier = frontier.flatMap(nbrs) -- want.keySet
+        want ++= frontier.map(_ -> d)
+      }
+      val got = Dedup.bfsDepth(edges, seeds)
+      assert(got.schema("doc_id").dataType === edges.schema("a").dataType)
+      assert(got.collect().map(r => r.getAs[Number]("doc_id").longValue ->
+        r.getAs[Int]("depth")).toMap === want)
+    }
+  }
+
+  test("pageRank, both paths: a STRING-keyed graph") {
+    import spark.implicits._
+    checkPageRank(Seq(("a", "b"), ("b", "c"), ("a", "c"), ("c", "d"), ("e", "e"))
+      .toDF("a", "b"))
+  }
 
   test("global row numbers are invariant to input partitioning") {
     import spark.implicits._

@@ -124,7 +124,7 @@ class ScaleOpsSpec extends SparkSpec {
     val edges = Seq(("a", "b"), ("b", "c"), ("a", "c"), ("c", "d"))
     val local = Dedup.pageRankLocal(edges).toMap
     import spark.implicits._
-    val dist = Dedup.pageRank(edges.toDF("a", "b")).collect()
+    val dist = Dedup.pageRankDistributed(edges.toDF("a", "b")).collect()
       .map(r => r.getString(0) -> r.getDouble(1)).toMap
     assert(local.keySet === dist.keySet)
     local.foreach { case (k, v) => assert(math.abs(v - dist(k)) < 1e-12, k) }
